@@ -16,6 +16,9 @@ object SparkEntry {
 
   private def cents(c: Column): Column = round(c * 100).cast("long")
 
+  private def z7Name(cell: Column): Column =
+    graft.spark.GridColumns(graft.dggs.GridKernel.igeo7()).string(cell)
+
   /** geoSpans RESTRICTED to the frozen fixture's key set (round-6
     * verdict #1): every query whose oracle inner-joins
     * `OracleFixtures.geoCellCte` consumes THIS relation, so the Spark
@@ -78,7 +81,8 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("dggs_cell_assign")(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    Map[String, (SparkSession, String) => DataFrame](
     // ---- relational anchors (harness sanity + shuffle/agg shapes) ----
     "q1_agg" -> ((s, dir) => {
       Tables.tbl(s, dir, "lineitem")
@@ -598,23 +602,6 @@ object SparkEntry {
     // ---- DGGS operators (cell math not SQL-expressible: stats has a
     // closed-form oracle; the rest are rows-only checks here and golden
     // DGGRID-parity checks in the ScalaTest suite) ----
-    "dggs_stats" -> ((s, _) => {
-      GridOps.gridStatsTable(s, 15)
-        .select(col("Resolution").cast("long").as("resolution"), col("Cells").as("cells"),
-          col("Area (km^2)").as("area_km2"), round(col("CLS (km)"), 6).as("cls_km"))
-    }),
-    "dggs_cell_assign" -> ((s, dir) => {
-      val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      GridOps.cellsForGeoPoints(geo, "lon", "lat", 5)
-        .select(col("doc_id"), col("offset"), col("name"))
-    }),
-    "dggs_parent_rollup" -> ((s, dir) => {
-      val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      import graft.spark.{DggsFunctions => F}
-      GridOps.cellsForGeoPoints(geo, "lon", "lat", 6)
-        .groupBy(F.z7String(F.z7AncestorAtExpr(col("cell_id"), lit(3))).as("name3"))
-        .agg(count(lit(1)).as("n"))
-    }),
     "dggs_pyramid" -> ((s, dir) => {
       // full zoom pyramid res 6 → 0, each level aggregated from the
       // level below (never from the points again); the oracle
@@ -634,9 +621,9 @@ object SparkEntry {
       // the numeric id parsed from "doc-%012d" (offset < 8 by corpus
       // construction, so the key is unique)
       val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      import graft.spark.{DggsFunctions => F}
+      val z7 = graft.spark.GridColumns(graft.dggs.GridKernel.igeo7())
       val cells = GridOps.cellsForGeoPoints(geo, "lon", "lat", 3)
-        .withColumn("name1", F.z7String(F.z7AncestorAtExpr(col("cell_id"), lit(1))))
+        .withColumn("name1", z7.string(z7.ancestorAtExpr(col("cell_id"), lit(1))))
       TextOps.sampleCapPerKey(cells, col("name1"),
           substring(col("doc_id"), 5, 12).cast("long") * 8 + col("offset"), 4)
         .select(col("doc_id"), col("offset"), col("name1"),
@@ -670,15 +657,12 @@ object SparkEntry {
       // recomputes the sketch BIT-FOR-BIT (k smallest 12-hex-char md5
       // prefixes per group, same (k−1)/kth·2^48 formula)
       val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      import graft.spark.{DggsFunctions => F, SketchFunctions}
+      import graft.spark.SketchFunctions
+      val z7 = graft.spark.GridColumns(graft.dggs.GridKernel.igeo7())
       GridOps.cellsForGeoPoints(geo, "lon", "lat", 5)
-        .groupBy(F.z7String(F.z7AncestorAtExpr(col("cell_id"), lit(2))).as("name2"))
+        .groupBy(z7.string(z7.ancestorAtExpr(col("cell_id"), lit(2))).as("name2"))
         .agg(SketchFunctions.kmvDistinct(col("doc_id"), 32).as("kmv_est"),
           countDistinct(col("doc_id")).as("n_exact"))
-    }),
-    "dggs_extent_ids" -> ((s, _) => {
-      GridOps.gridCellIdsForExtent(s, 4, Some((20.2, 57.0, 28.4, 60.0)))
-        .select(graft.spark.DggsFunctions.z7String(col("cell_id")).as("name"))
     }),
     "dggs_wrap_extent_ids" -> ((s, _) => {
       // ANTIMERIDIAN-CROSSING extent (lonMin > lonMax spans
@@ -687,13 +671,13 @@ object SparkEntry {
       // computed by the ordinary non-wrapped path — the wrapped
       // implementation is checked against the unwrapped one.
       GridOps.gridCellIdsForExtent(s, 4, Some((175.0, -20.0, -175.0, -10.0)))
-        .select(graft.spark.DggsFunctions.z7String(col("cell_id")).as("name"))
+        .select(z7Name(col("cell_id")).as("name"))
     }),
     "dggs_wkt_extent_ids" -> ((s, _) => {
       // arbitrary-geometry clip (reference clip_subset_type GDAL):
       // distributed cover expansion, no driver-side cell materialization
       SpatialOps.gridCellIdsForWkt(s, OracleFixtures.wktClip, 5)
-        .select(graft.spark.DggsFunctions.z7String(col("cell_id")).as("name"))
+        .select(z7Name(col("cell_id")).as("name"))
     }),
     "dggs_polar_cover" -> ((s, _) => {
       // pole-enclosing clip boxes (round-4: the antimeridian unwrap used
@@ -706,23 +690,12 @@ object SparkEntry {
         ("south", OracleFixtures.polarSouthWkt)).toDF("poly_id", "wkt")
       SpatialOps.coverCellsDf(polys, 3)
         .select(col("poly_id"),
-          graft.spark.DggsFunctions.z7String(col("cell_id")).as("name"))
-    }),
-    "dggs_coarse_children" -> ((s, _) => {
-      import s.implicits._
-      import graft.spark.{DggsFunctions => F}
-      // the FIXTURES.md §1.4 parent/children cases: "023" res1→res5,
-      // "000125023" res7→res9
-      val parents = Seq(("023", 5), ("000125023", 9)).toDF("parent", "to_res")
-      parents
-        .withColumn("cell_id",
-          explode(F.z7DescendantsAt(F.z7FromString(col("parent")), col("to_res"))))
-        .select(col("parent"), F.z7String(col("cell_id")).as("name"))
+          z7Name(col("cell_id")).as("name"))
     }),
 
     "dggs_compact" -> ((s, _) => {
       import s.implicits._
-      import graft.spark.{DggsFunctions => F}
+      val z7 = graft.spark.GridColumns(graft.dggs.GridKernel.igeo7())
       // minimal-cover compaction over a constructed mixed set: the full
       // res-3 cover under hexagon "023" (cascades to the parent), the
       // same under "045" minus one cell (6 complete res-2 families
@@ -737,9 +710,9 @@ object SparkEntry {
         "0000", "0001", "0003", "0004", "0005", "0006").toDF("name")
       val scatter = Seq("06612", "06646", "06600").toDF("name")
       val cells = full.unionByName(pent).unionByName(scatter)
-        .select(F.z7FromString(col("name")).as("cell_id"))
+        .select(z7.fromString(col("name")).as("cell_id"))
       GridOps.compactCells(cells)
-        .select(F.z7String(col("cell_id")).as("name"))
+        .select(z7.string(col("cell_id")).as("name"))
     }),
     "dggs_spatial_join" -> ((s, dir) => {
       val geo = CorpusOps.geoSpans(CorpusOps.interleavedDocs(Tables.tbl(s, dir, "documents")))
@@ -784,26 +757,6 @@ object SparkEntry {
       SpatialOps.pointInPolygonJoinCompact(geo, "lon", "lat", cover, 4,
         broadcastCovers = Some(true))
         .select(col("doc_id"), col("offset"), col("poly_id"))
-    }),
-    "dggs_4t_compact" -> ((s, _) => {
-      // compaction on the aperture-4 TRIANGLE grid (family size 4, no
-      // pentagon case): the full res-3 cover under base "05" cascades to
-      // the base cell; res-6 descendants of "172031" minus one leaf
-      // compact 3 of 4 res-5 families and keep the punctured family's 3
-      // survivors; a 2-cell scatter passes through
-      import s.implicits._
-      import graft.spark.{T4Functions => T}
-      val full = Seq("05").toDF("p")
-        .select(explode(T.t4DescendantsAt(T.t4FromString(col("p")), lit(3)))
-          .as("cell_id"))
-      val punct = Seq("172031").toDF("p")
-        .select(explode(T.t4DescendantsAt(T.t4FromString(col("p")), lit(6)))
-          .as("cell_id"))
-        .where(T.t4String(col("cell_id")) =!= "17203111")
-      val scatter = Seq("0311", "0322").toDF("n")
-        .select(T.t4FromString(col("n")).as("cell_id"))
-      GridOps.compactCells4T(full.unionByName(punct).unionByName(scatter))
-        .select(T.t4String(col("cell_id")).as("name"))
     }),
     "dggs_zonal_stats" -> ((s, dir) => {
       // ZONAL STATISTICS: per-polygon aggregates of a per-span weight
@@ -896,326 +849,14 @@ object SparkEntry {
       val ranges = CheckpointedRun.planRanges(cells, "cell_id", 1, target)
       val outDir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
       CheckpointedRun.run(cells, "cell_id", ranges, outDir) { df =>
-        df.groupBy(graft.spark.DggsFunctions.z7AncestorAt(col("cell_id"), lit(2)).as("cell2"))
+        df.groupBy(graft.spark.GridColumns(graft.dggs.GridKernel.igeo7())
+            .ancestorAt(col("cell_id"), lit(2)).as("cell2"))
           .agg(count(lit(1)).as("n"))
       }
       CheckpointedRun.readOutput(s, outDir)
         .groupBy("cell2").agg(sum("n").as("n"))
-        .select(graft.spark.DggsFunctions.z7String(col("cell2")).as("name2"), col("n"))
+        .select(z7Name(col("cell2")).as("name2"), col("n"))
     }),
-    // ---- ISEA4T (aperture-4 triangle kernel) ----
-    "dggs_4t_stats" -> ((s, _) => {
-      GridOps.gridStatsTable(s, 15, 4, "TRIANGLE")
-        .select(col("Resolution").cast("long").as("resolution"), col("Cells").as("cells"),
-          col("Area (km^2)").as("area_km2"), round(col("CLS (km)"), 6).as("cls_km"))
-    }),
-    "dggs_4t_cell_assign" -> ((s, dir) => {
-      val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      GridOps.cellsForGeoPoints4T(geo, "lon", "lat", 5)
-        .select(col("doc_id"), col("offset"), col("name"))
-    }),
-    "dggs_4t_parent_rollup" -> ((s, dir) => {
-      import graft.spark.{T4Functions => T}
-      val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      GridOps.cellsForGeoPoints4T(geo, "lon", "lat", 6)
-        .groupBy(T.t4String(T.t4AncestorAtExpr(col("cell_id"), lit(2))).as("name2"))
-        .agg(count(lit(1)).as("n"))
-    }),
-    "dggs_4t_children" -> ((s, _) => {
-      import s.implicits._
-      import graft.spark.{T4Functions => T}
-      val parents = Seq(("05", 4), ("172031", 8)).toDF("parent", "to_res")
-      parents
-        .withColumn("cell_id",
-          explode(T.t4DescendantsAt(T.t4FromString(col("parent")), col("to_res"))))
-        .select(col("parent"), T.t4String(col("cell_id")).as("name"))
-    }),
-
-    // ---- ISEA4D (aperture-4 diamond kernel) ----
-    "dggs_4d_stats" -> ((s, _) => {
-      GridOps.gridStatsTable(s, 15, 4, "DIAMOND")
-        .select(col("Resolution").cast("long").as("resolution"), col("Cells").as("cells"),
-          col("Area (km^2)").as("area_km2"), round(col("CLS (km)"), 6).as("cls_km"))
-    }),
-    "dggs_4d_cell_assign" -> ((s, dir) => {
-      val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      GridOps.cellsForGeoPoints4D(geo, "lon", "lat", 5)
-        .select(col("doc_id"), col("offset"), col("name"))
-    }),
-    "dggs_4d_parent_rollup" -> ((s, dir) => {
-      import graft.spark.{D4Functions => D}
-      val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      GridOps.cellsForGeoPoints4D(geo, "lon", "lat", 6)
-        .groupBy(D.d4String(D.d4AncestorAtExpr(col("cell_id"), lit(2))).as("name2"))
-        .agg(count(lit(1)).as("n"))
-    }),
-
-    // ---- ISEA3H (aperture-3 hexagon kernel, round 8) ----
-    "dggs_3h_stats" -> ((s, _) => {
-      GridOps.gridStatsTable(s, 15, 3, "HEXAGON")
-        .select(col("Resolution").cast("long").as("resolution"), col("Cells").as("cells"),
-          col("Area (km^2)").as("area_km2"), round(col("CLS (km)"), 6).as("cls_km"))
-    }),
-    "dggs_3h_cell_assign" -> ((s, dir) => {
-      val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      GridOps.cellsForGeoPoints3H(geo, "lon", "lat", 6)
-        .select(col("doc_id"), col("offset"), col("name"))
-    }),
-    "dggs_3h_parent_rollup" -> ((s, dir) => {
-      // index-space rollup: Z3 paths are prefix-hierarchical even though
-      // aperture-3 hexagons don't nest geometrically, so the oracle's
-      // substr over the frozen res-6 column is the exact semantics
-      import graft.spark.{Z3Functions => H}
-      val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      GridOps.cellsForGeoPoints3H(geo, "lon", "lat", 6)
-        .groupBy(H.z3String(H.z3AncestorAtExpr(col("cell_id"), lit(2))).as("name2"))
-        .agg(count(lit(1)).as("n"))
-    }),
-    "dggs_3h_children" -> ((s, _) => {
-      import s.implicits._
-      import graft.spark.{Z3Functions => H}
-      // a quad subtree, a deep quad subtree, and a cap subtree (caps
-      // have exactly one child per level — the engine contract)
-      val parents = Seq(("05", 2), ("070210", 8), ("00", 3)).toDF("parent", "to_res")
-      parents
-        .withColumn("cell_id",
-          explode(H.z3DescendantsAt(H.z3FromString(col("parent")), col("to_res"))))
-        .select(col("parent"), H.z3String(col("cell_id")).as("name"))
-    }),
-    "dggs_3h_addr_transform" -> ((s, dir) => {
-      // hop chain Z3_STRING → ZORDER → Q2DI → Z3 → Z3_STRING: the middle
-      // hops exercise the bit-interleaved and (quad,i,j) frames both
-      // directions end-to-end; the round-trip identity keeps the frozen
-      // h6 oracle valid (the VERTEX2DD pattern of dggs_addr_transform)
-      val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      val cells = GridOps.cellsForGeoPoints3H(geo, "lon", "lat", 6)
-        .select(col("doc_id"), col("offset"), col("name"))
-      val zo = GridOps.addressTransform3H(cells, "name", "Z3_STRING", "ZORDER", 6)
-        .withColumnRenamed("out_addr", "zo")
-      val qij = GridOps.addressTransform3H(zo, "zo", "ZORDER", "Q2DI", 6)
-        .withColumnRenamed("out_addr", "qij")
-      val z3 = GridOps.addressTransform3H(qij, "qij", "Q2DI", "Z3", 6)
-        .withColumnRenamed("out_addr", "z3")
-      GridOps.addressTransform3H(z3, "z3", "Z3", "Z3_STRING", 6)
-        .select(col("doc_id"), col("offset"), col("out_addr").as("name"))
-    }),
-    "dggs_3h_compact" -> ((s, _) => {
-      import s.implicits._
-      import graft.spark.{Z3Functions => H}
-      // compaction on the aperture-3 hex INDEX hierarchy (family size 3
-      // on quad bases, 1 on the caps): the full res-3 cover under quad
-      // base "05" cascades to the base cell; res-6 descendants of
-      // "072012" minus one leaf compact 2 of 3 res-5 families and keep
-      // the punctured family's 2 survivors; a lone cap descendant
-      // ("000000") cascades through the family-1 cap rule to "00"; a
-      // 2-cell scatter passes through
-      val full = Seq("05").toDF("p")
-        .select(explode(H.z3DescendantsAt(H.z3FromString(col("p")), lit(3)))
-          .as("cell_id"))
-      val punct = Seq("072012").toDF("p")
-        .select(explode(H.z3DescendantsAt(H.z3FromString(col("p")), lit(6)))
-          .as("cell_id"))
-        .where(H.z3String(col("cell_id")) =!= "07201211")
-      val capAndScatter = Seq("000000", "0311", "0322").toDF("n")
-        .select(H.z3FromString(col("n")).as("cell_id"))
-      GridOps.compactCells3H(full.unionByName(punct).unionByName(capAndScatter))
-        .select(H.z3String(col("cell_id")).as("name"))
-    }),
-    "dggs_3h_extent_ids" -> ((s, _) => {
-      // clipped hex extent via sample-assign-refine (levelwise pruning
-      // is unsound on the hex index hierarchies — seam re-homing; the
-      // exactness property vs brute force is SparkOpsSpec "hex extent
-      // ids", the frozen fixture pins regression)
-      import graft.spark.{Z3Functions => H}
-      GridOps.gridCellIdsForExtent3H(s, 8, Some((20.2, 57.0, 28.4, 60.0)))
-        .select(H.z3String(col("cell_id")).as("name"))
-    }),
-    "dggs_3h_cell_geom" -> ((s, _) => {
-      // H1/H2 analog on the hex grid: centroid (µdeg floor) + vertex
-      // count per extent cell via the SPARK column path; the oracle is
-      // frozen from the DRIVER-side pure kernel — the two paths
-      // cross-check (the polar_cover pattern)
-      import graft.spark.{Z3Functions => H}
-      val c = H.cellCenter(col("cell_id"))
-      GridOps.gridCellIdsForExtent3H(s, 8, Some((20.2, 57.0, 28.4, 60.0)))
-        .select(H.z3String(col("cell_id")).as("name"),
-          floor(c.getField("lon") * 1e6).cast("long").as("lon_udeg"),
-          floor(c.getField("lat") * 1e6).cast("long").as("lat_udeg"),
-          size(H.cellBoundary(col("cell_id"))).cast("long").as("n_vertices"))
-    }),
-
-    // ---- ISEA4H (aperture-4 hexagon kernel, round 8) ----
-    "dggs_4h_stats" -> ((s, _) => {
-      GridOps.gridStatsTable(s, 15, 4, "HEXAGON")
-        .select(col("Resolution").cast("long").as("resolution"), col("Cells").as("cells"),
-          col("Area (km^2)").as("area_km2"), round(col("CLS (km)"), 6).as("cls_km"))
-    }),
-    "dggs_4h_cell_assign" -> ((s, dir) => {
-      val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      GridOps.cellsForGeoPoints4H(geo, "lon", "lat", 6)
-        .select(col("doc_id"), col("offset"), col("name"))
-    }),
-    "dggs_4h_parent_rollup" -> ((s, dir) => {
-      // index-space rollup: Z4 paths are prefix-hierarchical (aperture-4
-      // hexagons don't nest geometrically either, though all 4 child
-      // centers sit inside the parent), so the oracle's substr over the
-      // frozen res-6 column is the exact semantics
-      import graft.spark.{Z4Functions => H}
-      val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      GridOps.cellsForGeoPoints4H(geo, "lon", "lat", 6)
-        .groupBy(H.z4String(H.z4AncestorAtExpr(col("cell_id"), lit(2))).as("name2"))
-        .agg(count(lit(1)).as("n"))
-    }),
-    "dggs_4h_children" -> ((s, _) => {
-      import s.implicits._
-      import graft.spark.{Z4Functions => H}
-      // a quad subtree, a deep quad subtree, and a cap subtree (caps
-      // have exactly one child per level — the engine contract)
-      val parents = Seq(("05", 2), ("070310", 8), ("00", 3)).toDF("parent", "to_res")
-      parents
-        .withColumn("cell_id",
-          explode(H.z4DescendantsAt(H.z4FromString(col("parent")), col("to_res"))))
-        .select(col("parent"), H.z4String(col("cell_id")).as("name"))
-    }),
-    "dggs_4h_addr_transform" -> ((s, dir) => {
-      // hop chain Z4_STRING → ZORDER → Q2DI → Z4 → Z4_STRING: the middle
-      // hops exercise the bit-interleaved and (quad,i,j) frames both
-      // directions end-to-end; the round-trip identity keeps the frozen
-      // f6 oracle valid (the 3H/VERTEX2DD pattern)
-      val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      val cells = GridOps.cellsForGeoPoints4H(geo, "lon", "lat", 6)
-        .select(col("doc_id"), col("offset"), col("name"))
-      val zo = GridOps.addressTransform4H(cells, "name", "Z4_STRING", "ZORDER", 6)
-        .withColumnRenamed("out_addr", "zo")
-      val qij = GridOps.addressTransform4H(zo, "zo", "ZORDER", "Q2DI", 6)
-        .withColumnRenamed("out_addr", "qij")
-      val z4 = GridOps.addressTransform4H(qij, "qij", "Q2DI", "Z4", 6)
-        .withColumnRenamed("out_addr", "z4")
-      GridOps.addressTransform4H(z4, "z4", "Z4", "Z4_STRING", 6)
-        .select(col("doc_id"), col("offset"), col("out_addr").as("name"))
-    }),
-    "dggs_4h_compact" -> ((s, _) => {
-      import s.implicits._
-      import graft.spark.{Z4Functions => H}
-      // the 3H compact scenario on the aperture-4 hierarchy (family 4 on
-      // quad bases, 1 on the caps) — this time the cap chain runs under
-      // base 11 so both caps are covered across the two hex compact
-      // queries
-      val full = Seq("05").toDF("p")
-        .select(explode(H.z4DescendantsAt(H.z4FromString(col("p")), lit(3)))
-          .as("cell_id"))
-      val punct = Seq("072013").toDF("p")
-        .select(explode(H.z4DescendantsAt(H.z4FromString(col("p")), lit(6)))
-          .as("cell_id"))
-        .where(H.z4String(col("cell_id")) =!= "07201311")
-      val capAndScatter = Seq("110000", "0311", "0322").toDF("n")
-        .select(H.z4FromString(col("n")).as("cell_id"))
-      GridOps.compactCells4H(full.unionByName(punct).unionByName(capAndScatter))
-        .select(H.z4String(col("cell_id")).as("name"))
-    }),
-    "dggs_4h_extent_ids" -> ((s, _) => {
-      import graft.spark.{Z4Functions => H}
-      GridOps.gridCellIdsForExtent4H(s, 6, Some((20.2, 57.0, 28.4, 60.0)))
-        .select(H.z4String(col("cell_id")).as("name"))
-    }),
-    "dggs_4h_cell_geom" -> ((s, _) => {
-      import graft.spark.{Z4Functions => H}
-      val c = H.cellCenter(col("cell_id"))
-      GridOps.gridCellIdsForExtent4H(s, 6, Some((20.2, 57.0, 28.4, 60.0)))
-        .select(H.z4String(col("cell_id")).as("name"),
-          floor(c.getField("lon") * 1e6).cast("long").as("lon_udeg"),
-          floor(c.getField("lat") * 1e6).cast("long").as("lat_udeg"),
-          size(H.cellBoundary(col("cell_id"))).cast("long").as("n_vertices"))
-    }),
-
-    // ---- ISEA43H (MIXED-aperture hexagon kernel, round 8; gate config
-    // mixed_aperture_level = 3: levels 1-3 aperture 4, 4+ aperture 3) ----
-    "dggs_43h_stats" -> ((s, _) => {
-      GridOps.gridStatsTable(s, 15, 43, "HEXAGON", mixedN4 = 3)
-        .select(col("Resolution").cast("long").as("resolution"), col("Cells").as("cells"),
-          col("Area (km^2)").as("area_km2"), round(col("CLS (km)"), 6).as("cls_km"))
-    }),
-    "dggs_43h_cell_assign" -> ((s, dir) => {
-      val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      GridOps.cellsForGeoPoints43H(geo, "lon", "lat", 6, 3)
-        .select(col("doc_id"), col("offset"), col("name"))
-    }),
-    "dggs_43h_parent_rollup" -> ((s, dir) => {
-      // rollup to res 2 — INSIDE the aperture-4 prefix of the gate
-      // config, so the substr oracle crosses the 4→3 boundary between
-      // the frozen res-6 digits and the res-2 ancestor
-      import graft.spark.{Z43Functions => H}
-      val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      GridOps.cellsForGeoPoints43H(geo, "lon", "lat", 6, 3)
-        .groupBy(H.z43String(H.z43AncestorAtExpr(col("cell_id"), lit(2))).as("name2"))
-        .agg(count(lit(1)).as("n"))
-    }),
-    "dggs_43h_children" -> ((s, _) => {
-      import s.implicits._
-      import graft.spark.{Z43Functions => H}
-      // "0531" res-2 → res-4 CROSSES the aperture boundary (level 3 is
-      // aperture 4: digits 0-3; level 4 is aperture 3: digits 0-2), plus
-      // a cap subtree (one child per level)
-      val parents = Seq(("0531", 4), ("00", 3)).toDF("parent", "to_res")
-      parents
-        .withColumn("cell_id",
-          explode(H.z43DescendantsAt(H.z43FromString(col("parent")), col("to_res"), 3)))
-        .select(col("parent"), H.z43String(col("cell_id")).as("name"))
-    }),
-    "dggs_43h_addr_transform" -> ((s, dir) => {
-      // hop chain Z43_STRING → ZORDER_STRING → Q2DI → Z43 → Z43_STRING:
-      // the middle hops exercise the mixed-radix interleave and the
-      // reduced (quad,i,j) frame both directions end-to-end; the
-      // round-trip identity keeps the frozen m6 oracle valid
-      val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
-      val cells = GridOps.cellsForGeoPoints43H(geo, "lon", "lat", 6, 3)
-        .select(col("doc_id"), col("offset"), col("name"))
-      val zo = GridOps.addressTransform43H(cells, "name", "Z43_STRING", "ZORDER_STRING", 6, 3)
-        .withColumnRenamed("out_addr", "zo")
-      val qij = GridOps.addressTransform43H(zo, "zo", "ZORDER_STRING", "Q2DI", 6, 3)
-        .withColumnRenamed("out_addr", "qij")
-      val z43 = GridOps.addressTransform43H(qij, "qij", "Q2DI", "Z43", 6, 3)
-        .withColumnRenamed("out_addr", "z43")
-      GridOps.addressTransform43H(z43, "z43", "Z43", "Z43_STRING", 6, 3)
-        .select(col("doc_id"), col("offset"), col("out_addr").as("name"))
-    }),
-    "dggs_43h_extent_ids" -> ((s, _) => {
-      import graft.spark.{Z43Functions => H}
-      GridOps.gridCellIdsForExtent43H(s, 6, 3, Some((20.2, 57.0, 28.4, 60.0)))
-        .select(H.z43String(col("cell_id")).as("name"))
-    }),
-    "dggs_43h_cell_geom" -> ((s, _) => {
-      import graft.spark.{Z43Functions => H}
-      val c = H.cellCenter(col("cell_id"), 3)
-      GridOps.gridCellIdsForExtent43H(s, 6, 3, Some((20.2, 57.0, 28.4, 60.0)))
-        .select(H.z43String(col("cell_id")).as("name"),
-          floor(c.getField("lon") * 1e6).cast("long").as("lon_udeg"),
-          floor(c.getField("lat") * 1e6).cast("long").as("lat_udeg"),
-          size(H.cellBoundary(col("cell_id"), 3)).cast("long").as("n_vertices"))
-    }),
-    "dggs_43h_compact" -> ((s, _) => {
-      import s.implicits._
-      import graft.spark.{Z43Functions => H}
-      // mixed-aperture compaction ACROSS the 4→3 boundary (n4=3): the
-      // full res-3 cover under "05" compacts through three aperture-4
-      // levels; the res-4 descendants of "0720" minus one leaf compact
-      // 3 of 4 level-4 families (each family size 3 — level 4 is
-      // aperture 3) but the level-3 family of 4 stays incomplete; cap
-      // chain + scatter as in the pure-aperture queries
-      val full = Seq("05").toDF("p")
-        .select(explode(H.z43DescendantsAt(H.z43FromString(col("p")), lit(3), 3))
-          .as("cell_id"))
-      val punct = Seq("0720").toDF("p")
-        .select(explode(H.z43DescendantsAt(H.z43FromString(col("p")), lit(4), 3))
-          .as("cell_id"))
-        .where(H.z43String(col("cell_id")) =!= "072032")
-      val capAndScatter = Seq("00000", "0311", "0322").toDF("n")
-        .select(H.z43FromString(col("n")).as("cell_id"))
-      GridOps.compactCells43H(
-          full.unionByName(punct).unionByName(capAndScatter), 3)
-        .select(H.z43String(col("cell_id")).as("name"))
-    }),
-
     "dggs_addr_transform" -> ((s, dir) => {
       val geo = fixtureGeoSpans(s, dir) // fixture-key-restricted (oracle joins the frozen CTE)
       val cells = GridOps.cellsForGeoPoints(geo, "lon", "lat", 4)
@@ -1228,7 +869,140 @@ object SparkEntry {
       GridOps.addressTransform(v2, "v2dd", "VERTEX2DD", "SEQNUM", 4)
         .select(col("doc_id"), col("offset"), col("name"), col("out_addr").as("seqnum"))
     })
-  )
+  ) ++ kernelQueries
+
+  /** The per-kernel DGGS query families whose bodies share one shape, as
+    * a kernel × operation table: each row is (query name, kernel, the
+    * operation's parameters). ISEA43H runs at the gate configuration
+    * mixed_aperture_level = 3 (levels 1-3 aperture 4, 4+ aperture 3).
+    */
+  private def kernelQueries: Map[String, (SparkSession, String) => DataFrame] = {
+    import graft.dggs.GridKernel
+    import graft.spark.GridColumns
+    val (z7, t4, d4) = (GridKernel.igeo7(), GridKernel.isea4t(), GridKernel.isea4d())
+    val (h3, h4, h43) = (GridKernel.isea3h(), GridKernel.isea4h(), GridKernel.isea43h(3))
+    val box = Some((20.2, 57.0, 28.4, 60.0))
+    // closed-form stats table per (aperture, topology)
+    val stats = Seq(("dggs_stats", 7, "HEXAGON"), ("dggs_4t_stats", 4, "TRIANGLE"),
+      ("dggs_4d_stats", 4, "DIAMOND"), ("dggs_3h_stats", 3, "HEXAGON"),
+      ("dggs_4h_stats", 4, "HEXAGON"), ("dggs_43h_stats", 43, "HEXAGON"))
+      .map { case (name, aperture, topology) => name -> ((s: SparkSession, _: String) =>
+        GridOps.gridStatsTable(s, 15, aperture, topology)
+          .select(col("Resolution").cast("long").as("resolution"), col("Cells").as("cells"),
+            col("Area (km^2)").as("area_km2"), round(col("CLS (km)"), 6).as("cls_km")))
+      }
+    // point assignment over the fixture-key-restricted spans (the
+    // oracles join the frozen CTE)
+    val assign = Seq(("dggs_cell_assign", z7, 5), ("dggs_4t_cell_assign", t4, 5),
+      ("dggs_4d_cell_assign", d4, 5), ("dggs_3h_cell_assign", h3, 6),
+      ("dggs_4h_cell_assign", h4, 6), ("dggs_43h_cell_assign", h43, 6))
+      .map { case (name, k, res) => name -> ((s: SparkSession, dir: String) =>
+        GridOps.cellsForGeoPoints(fixtureGeoSpans(s, dir), "lon", "lat", res, k)
+          .select(col("doc_id"), col("offset"), col("name")))
+      }
+    // index-space rollup of res-6 cells to ancestor level r: every id
+    // layout is prefix-hierarchical (even where aperture-3/4 hexagons
+    // don't nest geometrically), so the oracle's substr over the frozen
+    // column is the exact semantics; ISEA43H's level 2 lies inside the
+    // aperture-4 prefix, so its oracle crosses the 4→3 boundary
+    val rollup = Seq(("dggs_parent_rollup", z7, 3), ("dggs_4t_parent_rollup", t4, 2),
+      ("dggs_4d_parent_rollup", d4, 2), ("dggs_3h_parent_rollup", h3, 2),
+      ("dggs_4h_parent_rollup", h4, 2), ("dggs_43h_parent_rollup", h43, 2))
+      .map { case (name, k, r) => name -> ((s: SparkSession, dir: String) => {
+        val g = GridColumns(k)
+        GridOps.cellsForGeoPoints(fixtureGeoSpans(s, dir), "lon", "lat", 6, k)
+          .groupBy(g.string(g.ancestorAtExpr(col("cell_id"), lit(r))).as(s"name$r"))
+          .agg(count(lit(1)).as("n"))
+      })
+      }
+    // descendants of (parent, to_res) pairs: the FIXTURES.md §1.4 Z7
+    // cases; on the hex kernels a quad subtree, a deep quad subtree and
+    // a cap subtree (caps have exactly one child per level — the engine
+    // contract); ISEA43H's "0531" res 2 → 4 crosses the aperture
+    // boundary (level 3 digits 0-3, level 4 digits 0-2)
+    val children = Seq(
+      ("dggs_coarse_children", z7, Seq(("023", 5), ("000125023", 9))),
+      ("dggs_4t_children", t4, Seq(("05", 4), ("172031", 8))),
+      ("dggs_3h_children", h3, Seq(("05", 2), ("070210", 8), ("00", 3))),
+      ("dggs_4h_children", h4, Seq(("05", 2), ("070310", 8), ("00", 3))),
+      ("dggs_43h_children", h43, Seq(("0531", 4), ("00", 3))))
+      .map { case (name, k, parents) => name -> ((s: SparkSession, _: String) => {
+        import s.implicits._
+        val g = GridColumns(k)
+        parents.toDF("parent", "to_res")
+          .withColumn("cell_id",
+            explode(g.descendantsAt(g.fromString(col("parent")), col("to_res"))))
+          .select(col("parent"), g.string(col("cell_id")).as("name"))
+      })
+      }
+    // clipped extent ids; the hex kernels sample-assign-refine
+    // (levelwise pruning is unsound on their index hierarchies — seam
+    // re-homing; exactness vs brute force is SparkOpsSpec "hex extent
+    // ids", the frozen fixture pins regression)
+    val extent = Seq(("dggs_extent_ids", z7, 4), ("dggs_3h_extent_ids", h3, 8),
+      ("dggs_4h_extent_ids", h4, 6), ("dggs_43h_extent_ids", h43, 6))
+      .map { case (name, k, res) => name -> ((s: SparkSession, _: String) =>
+        GridOps.gridCellIdsForExtent(s, res, box, k)
+          .select(GridColumns(k).string(col("cell_id")).as("name")))
+      }
+    // H1/H2 analog on the hex grids: centroid (µdeg floor) + vertex count
+    // per extent cell via the SPARK column path; the oracle is frozen
+    // from the DRIVER-side pure kernel — the two paths cross-check
+    val geom = Seq(("dggs_3h_cell_geom", h3, 8), ("dggs_4h_cell_geom", h4, 6),
+      ("dggs_43h_cell_geom", h43, 6))
+      .map { case (name, k, res) => name -> ((s: SparkSession, _: String) => {
+        val g = GridColumns(k)
+        val c = g.cellCenter(col("cell_id"))
+        GridOps.gridCellIdsForExtent(s, res, box, k)
+          .select(g.string(col("cell_id")).as("name"),
+            floor(c.getField("lon") * 1e6).cast("long").as("lon_udeg"),
+            floor(c.getField("lat") * 1e6).cast("long").as("lat_udeg"),
+            size(g.cellBoundary(col("cell_id"))).cast("long").as("n_vertices"))
+      })
+      }
+    // hop chain <id>_STRING → ZORDER(_STRING) → Q2DI → <id> → <id>_STRING:
+    // the middle hops exercise the bit-interleaved (mixed radix on
+    // ISEA43H) and (quad,i,j) frames both directions end-to-end; the
+    // round-trip identity keeps the frozen res-6 oracle valid
+    val addr = Seq(("dggs_3h_addr_transform", h3, "ZORDER"),
+      ("dggs_4h_addr_transform", h4, "ZORDER"),
+      ("dggs_43h_addr_transform", h43, "ZORDER_STRING"))
+      .map { case (name, k, zo) => name -> ((s: SparkSession, dir: String) => {
+        val (id, str) = (k.idType, k.idType + "_STRING")
+        def hop(df: DataFrame, c: String, from: String, to: String) =
+          GridOps.addressTransform(df, c, from, to, 6, k).withColumnRenamed("out_addr", to)
+        val cells = GridOps.cellsForGeoPoints(fixtureGeoSpans(s, dir), "lon", "lat", 6, k)
+          .select(col("doc_id"), col("offset"), col("name"))
+        val ids = hop(hop(hop(cells, "name", str, zo), zo, zo, "Q2DI"), "Q2DI", "Q2DI", id)
+        GridOps.addressTransform(ids, id, id, str, 6, k)
+          .select(col("doc_id"), col("offset"), col("out_addr").as("name"))
+      })
+      }
+    // compaction: the full res-3 cover under quad base "05" cascades to
+    // the base cell; a deeper parent's descendants minus one leaf compact
+    // every family but the punctured one, whose survivors stay; a cap
+    // descendant chain (family size 1) cascades to its cap base; a
+    // scatter passes through. ISEA43H's punctured res-4 set compacts its
+    // aperture-3 level-4 families but not the aperture-4 level-3 family
+    val compact = Seq(
+      ("dggs_4t_compact", t4, ("172031", 6, "17203111"), Seq("0311", "0322")),
+      ("dggs_3h_compact", h3, ("072012", 6, "07201211"), Seq("000000", "0311", "0322")),
+      ("dggs_4h_compact", h4, ("072013", 6, "07201311"), Seq("110000", "0311", "0322")),
+      ("dggs_43h_compact", h43, ("0720", 4, "072032"), Seq("00000", "0311", "0322")))
+      .map { case (name, k, (parent, res, hole), loose) =>
+        name -> ((s: SparkSession, _: String) => {
+          import s.implicits._
+          val g = GridColumns(k)
+          def under(p: String, r: Int) = Seq(p).toDF("p")
+            .select(explode(g.descendantsAt(g.fromString(col("p")), lit(r))).as("cell_id"))
+          val punct = under(parent, res).where(g.string(col("cell_id")) =!= hole)
+          val rest = loose.toDF("n").select(g.fromString(col("n")).as("cell_id"))
+          GridOps.compactCells(under("05", 3).unionByName(punct).unionByName(rest), kernel = k)
+            .select(g.string(col("cell_id")).as("name"))
+        })
+      }
+    (stats ++ assign ++ rollup ++ children ++ extent ++ geom ++ addr ++ compact).toMap
+  }
 
   // ---------------------------------------------------------------------
   // DuckDB oracle SQL. Shared CTE fragments keep the two sides aligned.

@@ -29,7 +29,12 @@ import Lattice._
   */
 final class IGeo7(vert0LatDeg: Double = 58.28252559,
                   vert0LonDeg: Double = 11.25,
-                  azimuthDeg: Double = 0.0) extends HexWalkerCore {
+                  azimuthDeg: Double = 0.0) extends HexWalkerCore with GridKernel {
+
+  val key: GridKernel.Key = GridKernel.Key("IGEO7", 0, vert0LatDeg, vert0LonDeg, azimuthDeg)
+  def codec: CellCodec = Z7
+  def idType: String = "Z7"
+  def apertureAt(k: Int): Int = 7
 
   val ico = new Icosahedron(vert0LatDeg, vert0LonDeg, azimuthDeg)
   val snyder = new SnyderISEA(ico)
@@ -37,7 +42,7 @@ final class IGeo7(vert0LatDeg: Double = 58.28252559,
 
   import quads.s
 
-  private val maxRes = 20
+  val maxRes = 20
   private val factorEis: Array[Eis] = {
     val arr = new Array[Eis](maxRes + 1)
     var f = Eis(1, 0)
@@ -247,8 +252,17 @@ final class IGeo7(vert0LatDeg: Double = 58.28252559,
     }
   }
 
+  /** pentagon subtree: S(d) = 1 + 5·(7^d − 1)/6 = (5·7^d + 1)/6 leaves
+    * at depth d (the center chain stays pentagonal, the other 5 children
+    * root full 7-ary subtrees)
+    */
+  override def subtreeSize(z: Long): Long = {
+    val s = super.subtreeSize(z)
+    if (Z7.isPentagon(z)) (5L * s + 1L) / 6L else s
+  }
+
   /** point -> Z7 cell id */
-  def cellForPoint(p: GeoRad, r: Int): Long = {
+  protected def locate(p: GeoRad, r: Int): Long = {
     val fix = fixForPoint(p, r)
     val fast = fastWalk(fix)
     if (fast != -1L) return fast

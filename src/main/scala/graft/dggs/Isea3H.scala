@@ -65,7 +65,12 @@ import Lattice._
   */
 final class Isea3H(vert0LatDeg: Double = 58.28252559,
                    vert0LonDeg: Double = 11.25,
-                   azimuthDeg: Double = 0.0) extends Serializable with HexWalker {
+                   azimuthDeg: Double = 0.0) extends HexWalker with HexIndexKernel {
+
+  val key: GridKernel.Key = GridKernel.Key("ISEA3H", 0, vert0LatDeg, vert0LonDeg, azimuthDeg)
+  def codec: CellCodec = Z3
+  def idType: String = "Z3"
+  def apertureAt(k: Int): Int = 3
 
   val ico = new Icosahedron(vert0LatDeg, vert0LonDeg, azimuthDeg)
   val snyder = new SnyderISEA(ico)
@@ -197,8 +202,7 @@ final class Isea3H(vert0LatDeg: Double = 58.28252559,
   }
 
   /** point -> Z3 cell id at res r */
-  def cellForPoint(p: GeoRad, r: Int): Long = {
-    require(r >= 0 && r <= maxRes, s"res $r out of [0,$maxRes]")
+  protected def locate(p: GeoRad, r: Int): Long = {
     val fix = foldToRhombus(fixForPoint(p, r))
     cellForFix(fix)
   }
@@ -463,11 +467,8 @@ final class Isea3H(vert0LatDeg: Double = 58.28252559,
   def toInterleave(z: Long): String = toZorderString(z)
 }
 
-/** per-JVM kernel cache (mirrors spark.Grids / Isea4TGrids) */
-object Isea3HGrids extends Serializable {
-  @transient private lazy val cache =
-    new java.util.concurrent.ConcurrentHashMap[(Double, Double, Double), Isea3H]()
-  def get(lat0: Double, lon0: Double, az: Double): Isea3H =
-    cache.computeIfAbsent((lat0, lon0, az), k => new Isea3H(k._1, k._2, k._3))
-  def default: Isea3H = get(58.28252559, 11.25, 0.0)
+/** forwarders to the [[GridKernel]] cache */
+object Isea3HGrids {
+  def get(lat0: Double, lon0: Double, az: Double): Isea3H = GridKernel.isea3h(lat0, lon0, az)
+  def default: Isea3H = GridKernel.isea3h()
 }

@@ -52,7 +52,7 @@ import Lattice._
 final class Isea43H(val n4: Int,
                     vert0LatDeg: Double = 58.28252559,
                     vert0LonDeg: Double = 11.25,
-                    azimuthDeg: Double = 0.0) extends Serializable with HexWalker {
+                    azimuthDeg: Double = 0.0) extends HexWalker with HexIndexKernel {
   require(n4 >= 0 && n4 <= Z4.MaxRes, s"mixed_aperture_level $n4 out of [0,${Z4.MaxRes}]")
 
   val ico = new Icosahedron(vert0LatDeg, vert0LonDeg, azimuthDeg)
@@ -62,9 +62,12 @@ final class Isea43H(val n4: Int,
   import quads.s
 
   val maxRes: Int = Z4.MaxRes
+  val key: GridKernel.Key = GridKernel.Key("ISEA43H", n4, vert0LatDeg, vert0LonDeg, azimuthDeg)
+  def codec: CellCodec = Z4
+  def idType: String = "Z43"
 
   /** aperture used descending TO level k (1-based) */
-  @inline def apertureAt(k: Int): Int = if (k <= n4) 4 else 3
+  def apertureAt(k: Int): Int = if (k <= n4) 4 else 3
 
   /** level factor: 2 for aperture-4 levels; the Isea3H alternation
     * (odd 3-level 2−ω, even 3-level 1+ω) indexed by the count of
@@ -209,8 +212,7 @@ final class Isea43H(val n4: Int,
   }
 
   /** point -> packed cell id at res r (3-bit-digit layout, Z4.pack) */
-  def cellForPoint(p: GeoRad, r: Int): Long = {
-    require(r >= 0 && r <= maxRes, s"res $r out of [0,$maxRes]")
+  protected def locate(p: GeoRad, r: Int): Long = {
     val fix = foldToRhombus(fixForPoint(p, r))
     cellForFix(fix)
   }
@@ -255,7 +257,7 @@ final class Isea43H(val n4: Int,
     * center child. This is the one hierarchy op the static codec cannot
     * provide — the digit alphabet is per-level.
     */
-  def children(z: Long): Seq[Long] = {
+  override def children(z: Long): Seq[Long] = {
     val b = Z4.baseCell(z)
     if (b == 0 || b == 11) Seq(Z4.child(z, 0))
     else {
@@ -264,7 +266,7 @@ final class Isea43H(val n4: Int,
     }
   }
 
-  def descendants(z: Long, toRes: Int): Seq[Long] = {
+  override def descendants(z: Long, toRes: Int): Seq[Long] = {
     val r = Z4.resolution(z)
     require(toRes >= r, s"toRes $toRes < res $r")
     var cur = Seq(z)
@@ -536,12 +538,9 @@ final class Isea43H(val n4: Int,
   def toInterleave(z: Long): String = toZorderString(z)
 }
 
-/** per-JVM kernel cache keyed by (n4, orientation) */
-object Isea43HGrids extends Serializable {
-  @transient private lazy val cache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Double, Double, Double), Isea43H]()
+/** forwarders to the [[GridKernel]] cache */
+object Isea43HGrids {
   def get(n4: Int, lat0: Double, lon0: Double, az: Double): Isea43H =
-    cache.computeIfAbsent((n4, lat0, lon0, az), k => new Isea43H(k._1, k._2, k._3, k._4))
-  /** the gate configuration: 3 leading aperture-4 resolutions */
-  def default(n4: Int = 3): Isea43H = get(n4, 58.28252559, 11.25, 0.0)
+    GridKernel.isea43h(n4, lat0, lon0, az)
+  def default(n4: Int = 3): Isea43H = GridKernel.isea43h(n4)
 }

@@ -53,7 +53,13 @@ object D4 extends Quat2Codec(1, 10, "quad") {
   */
 final class Isea4D(vert0LatDeg: Double = 58.28252559,
                    vert0LonDeg: Double = 11.25,
-                   azimuthDeg: Double = 0.0) extends Serializable {
+                   azimuthDeg: Double = 0.0) extends GridKernel {
+
+  val key: GridKernel.Key = GridKernel.Key("ISEA4D", 0, vert0LatDeg, vert0LonDeg, azimuthDeg)
+  def codec: CellCodec = D4
+  def idType: String = "D4"
+  def maxRes: Int = D4.MaxRes
+  def apertureAt(k: Int): Int = 4
 
   val ico = new Icosahedron(vert0LatDeg, vert0LonDeg, azimuthDeg)
   val snyder = new SnyderISEA(ico)
@@ -62,7 +68,7 @@ final class Isea4D(vert0LatDeg: Double = 58.28252559,
   private def uvToChart(u: Double, v: Double): (Double, Double) =
     (u * quads.s + v * quads.Bx._1, v * quads.Bx._2)
 
-  def cellForPoint(p: GeoRad, res: Int): Long = {
+  protected def locate(p: GeoRad, res: Int): Long = {
     val (q, x, y) = quads.sphereToQuad(p)
     val (u, v) = quads.rhombusUV(x, y)
     val n = 1L << res
@@ -79,11 +85,11 @@ final class Isea4D(vert0LatDeg: Double = 58.28252559,
   }
 
   /** the 4 rhombus corners on the sphere (u-then-v winding) */
-  def cellBoundary(id: Long): Seq[GeoRad] = {
+  def cellBoundary(id: Long): Array[GeoRad] = {
     val (i, j) = D4.toIj(id)
     val n = (1L << D4.resolution(id)).toDouble
     val q = D4.quad(id)
-    Seq((i / n, j / n), ((i + 1) / n, j / n), ((i + 1) / n, (j + 1) / n), (i / n, (j + 1) / n))
+    Array((i / n, j / n), ((i + 1) / n, j / n), ((i + 1) / n, (j + 1) / n), (i / n, (j + 1) / n))
       .map { case (u, v) =>
         val (x, y) = uvToChart(u, v)
         quads.quadToSphere(q, x, y)
@@ -91,10 +97,8 @@ final class Isea4D(vert0LatDeg: Double = 58.28252559,
   }
 }
 
-object Isea4DGrids extends Serializable {
-  @transient private lazy val cache =
-    new java.util.concurrent.ConcurrentHashMap[(Double, Double, Double), Isea4D]()
-  def get(lat0: Double, lon0: Double, az: Double): Isea4D =
-    cache.computeIfAbsent((lat0, lon0, az), k => new Isea4D(k._1, k._2, k._3))
-  def default: Isea4D = get(58.28252559, 11.25, 0.0)
+/** forwarders to the [[GridKernel]] cache */
+object Isea4DGrids {
+  def get(lat0: Double, lon0: Double, az: Double): Isea4D = GridKernel.isea4d(lat0, lon0, az)
+  def default: Isea4D = GridKernel.isea4d()
 }

@@ -50,7 +50,12 @@ import Lattice._
   */
 final class Isea4H(vert0LatDeg: Double = 58.28252559,
                    vert0LonDeg: Double = 11.25,
-                   azimuthDeg: Double = 0.0) extends Serializable with HexWalker {
+                   azimuthDeg: Double = 0.0) extends HexWalker with HexIndexKernel {
+
+  val key: GridKernel.Key = GridKernel.Key("ISEA4H", 0, vert0LatDeg, vert0LonDeg, azimuthDeg)
+  def codec: CellCodec = Z4
+  def idType: String = "Z4"
+  def apertureAt(k: Int): Int = 4
 
   val ico = new Icosahedron(vert0LatDeg, vert0LonDeg, azimuthDeg)
   val snyder = new SnyderISEA(ico)
@@ -159,8 +164,7 @@ final class Isea4H(vert0LatDeg: Double = 58.28252559,
   }
 
   /** point -> Z4 cell id at res r */
-  def cellForPoint(p: GeoRad, r: Int): Long = {
-    require(r >= 0 && r <= maxRes, s"res $r out of [0,$maxRes]")
+  protected def locate(p: GeoRad, r: Int): Long = {
     val fix = foldToRhombus(fixForPoint(p, r))
     cellForFix(fix)
   }
@@ -426,11 +430,8 @@ final class Isea4H(vert0LatDeg: Double = 58.28252559,
   def toInterleave(z: Long): String = toZorderString(z)
 }
 
-/** per-JVM kernel cache (mirrors spark.Grids / Isea3HGrids) */
-object Isea4HGrids extends Serializable {
-  @transient private lazy val cache =
-    new java.util.concurrent.ConcurrentHashMap[(Double, Double, Double), Isea4H]()
-  def get(lat0: Double, lon0: Double, az: Double): Isea4H =
-    cache.computeIfAbsent((lat0, lon0, az), k => new Isea4H(k._1, k._2, k._3))
-  def default: Isea4H = get(58.28252559, 11.25, 0.0)
+/** forwarders to the [[GridKernel]] cache */
+object Isea4HGrids {
+  def get(lat0: Double, lon0: Double, az: Double): Isea4H = GridKernel.isea4h(lat0, lon0, az)
+  def default: Isea4H = GridKernel.isea4h()
 }

@@ -38,7 +38,13 @@ object T4 extends Quat2Codec(0, 19, "face") {
   */
 final class Isea4T(vert0LatDeg: Double = 58.28252559,
                    vert0LonDeg: Double = 11.25,
-                   azimuthDeg: Double = 0.0) extends Serializable {
+                   azimuthDeg: Double = 0.0) extends GridKernel {
+
+  val key: GridKernel.Key = GridKernel.Key("ISEA4T", 0, vert0LatDeg, vert0LonDeg, azimuthDeg)
+  def codec: CellCodec = T4
+  def idType: String = "T4"
+  def maxRes: Int = T4.MaxRes
+  def apertureAt(k: Int): Int = 4
 
   val ico = new Icosahedron(vert0LatDeg, vert0LonDeg, azimuthDeg)
   val snyder = new SnyderISEA(ico)
@@ -61,7 +67,7 @@ final class Isea4T(vert0LatDeg: Double = 58.28252559,
   }
 
   /** point → T4 cell at `res` */
-  def cellForPoint(p: GeoRad, res: Int): Long = {
+  protected def locate(p: GeoRad, res: Int): Long = {
     val fp = snyder.forward(p)
     var (a, b, c) = faceBary(fp.x, fp.y)
     val digits = new Array[Int](res)
@@ -104,9 +110,9 @@ final class Isea4T(vert0LatDeg: Double = 58.28252559,
   }
 
   /** cell boundary: the 3 triangle corners on the sphere */
-  def cellBoundary(id: Long): Seq[GeoRad] = {
+  def cellBoundary(id: Long): Array[GeoRad] = {
     val f = T4.face(id)
-    planeCorners(id).toSeq.map { case (x, y) =>
+    planeCorners(id).map { case (x, y) =>
       snyder.inverse(snyder.FacePoint(f, x, y))
     }
   }
@@ -116,7 +122,7 @@ final class Isea4T(vert0LatDeg: Double = 58.28252559,
     * `densification` param — dggrid_runner.py:295)
     */
   def cellBoundaryDensified(id: Long, densify: Int): Seq[GeoRad] = {
-    if (densify <= 0) return cellBoundary(id)
+    if (densify <= 0) return cellBoundary(id).toSeq
     val f = T4.face(id)
     val cs = planeCorners(id)
     val out = scala.collection.mutable.ArrayBuffer[GeoRad]()
@@ -133,11 +139,8 @@ final class Isea4T(vert0LatDeg: Double = 58.28252559,
   }
 }
 
-/** per-JVM kernel cache (mirrors spark.Grids for IGeo7) */
-object Isea4TGrids extends Serializable {
-  @transient private lazy val cache =
-    new java.util.concurrent.ConcurrentHashMap[(Double, Double, Double), Isea4T]()
-  def get(lat0: Double, lon0: Double, az: Double): Isea4T =
-    cache.computeIfAbsent((lat0, lon0, az), k => new Isea4T(k._1, k._2, k._3))
-  def default: Isea4T = get(58.28252559, 11.25, 0.0)
+/** forwarders to the [[GridKernel]] cache */
+object Isea4TGrids {
+  def get(lat0: Double, lon0: Double, az: Double): Isea4T = GridKernel.isea4t(lat0, lon0, az)
+  def default: Isea4T = GridKernel.isea4t()
 }

@@ -7,8 +7,13 @@ package graft.dggs
   * sort in (base, digit-path) order, so sibling subtrees are contiguous
   * ranges; both hierarchies nest EXACTLY (digit prefixes = ancestors).
   */
-private[dggs] abstract class Quat2Codec(baseLo: Int, baseHi: Int, baseLabel: String) {
+private[dggs] abstract class Quat2Codec(baseLo: Int, baseHi: Int, baseLabel: String)
+    extends CellCodec {
   val MaxRes = 24
+  val layout: IdLayout = IdLayout.Quat2
+  val bases: Range = baseLo to baseHi
+  def toCellString(id: Long): String = toStr(id)
+  def fromCellString(s: String): Long = fromStr(s)
 
   def pack(base: Int, digits: Seq[Int]): Long = {
     require(base >= baseLo && base <= baseHi, s"$baseLabel $base")

@@ -29,9 +29,13 @@ package graft.dggs
   * subtree pruning are min/max range predicates (same storage-layer
   * property as Z7; SURVEY.md §4).
   */
-object Z3 {
+object Z3 extends CellCodec {
 
   val MaxRes = 30
+  val layout: IdLayout = IdLayout.PaddedDigits(2)
+  val bases: Range = 0 to 11
+  def toCellString(id: Long): String = toZ3String(id)
+  def fromCellString(s: String): Long = fromZ3String(s)
 
   /** Pack base cell + digits; remaining positions padded with 3. */
   def pack(base: Int, digits: Seq[Int]): Long = {

@@ -36,9 +36,13 @@ package graft.dggs
   * [rangeMin, rangeMax], the same storage-layer prefix-pruning property
   * as Z7/Z3 (SURVEY.md §4).
   */
-object Z4 {
+object Z4 extends CellCodec {
 
   val MaxRes = 20
+  val layout: IdLayout = IdLayout.PaddedDigits(3)
+  val bases: Range = 0 to 11
+  def toCellString(id: Long): String = toZ4String(id)
+  def fromCellString(s: String): Long = fromZ4String(s)
 
   /** Pack base cell + digits; remaining positions padded with 7. */
   def pack(base: Int, digits: Seq[Int]): Long = {

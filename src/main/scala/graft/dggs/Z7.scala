@@ -20,9 +20,13 @@ package graft.dggs
   * children-of-parent pruning into min/max range predicates that Parquet
   * row-group stats prune natively (SURVEY.md §4).
   */
-object Z7 {
+object Z7 extends CellCodec {
 
   val MaxRes = 20
+  val layout: IdLayout = IdLayout.PaddedDigits(3)
+  val bases: Range = 0 to 11
+  def toCellString(id: Long): String = toZ7String(id)
+  def fromCellString(s: String): Long = fromZ7String(s)
 
   /** Pack base cell + digits; remaining positions padded with 7. */
   def pack(base: Int, digits: Seq[Int]): Long = {

@@ -3,8 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardOpenOption}
-import graft.dggs.Z7
-import graft.spark.{DggsFunctions => F}
+import graft.dggs.{GridKernel, Z7}
+import graft.spark.GridColumns
 
 /** Checkpoint-resumable partitioned runs with per-partition lineage and
   * metrics (north_rule): the work is split into contiguous Z7 cell-index
@@ -34,7 +34,7 @@ object CheckpointedRun {
   def planRanges(cells: DataFrame, cellCol: String, prefixRes: Int,
                  targetRows: Long): Seq[CellRange] = {
     val counts = cells
-      .groupBy(F.z7AncestorAt(col(cellCol), lit(prefixRes)).as("p"))
+      .groupBy(GridColumns(GridKernel.igeo7()).ancestorAt(col(cellCol), lit(prefixRes)).as("p"))
       .agg(count(lit(1)).as("n"))
       .orderBy("p")
       .collect()

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.locationtech.jts.geom.{Coordinate, GeometryFactory}
 import org.locationtech.jts.io.WKTReader
-import graft.dggs.{Sphere, Z7}
-import graft.spark.{DggsFunctions => F, Grids}
+import graft.dggs.{GridKernel, Sphere, Z7}
+import graft.spark.{DggsFunctions => F, GridColumns, Grids}
 
 /** Cell-indexed spatial joins and kNN (SURVEY.md §7 layer 5; the
   * north_star's "H3/S2-indexed broadcast-vs-shuffle spatial joins" —
@@ -17,7 +17,7 @@ import graft.spark.{DggsFunctions => F, Grids}
   * object is derived from the Z7 kernel (`coverCells*`, `F.z7Disk`,
   * `diskSafeKm`/KnnSafeRadiusSpec). Ids from the ISEA3H/4H/43H/4T/4D
   * kernels are NOT accepted — join those datasets by round-tripping
-  * through GEO (`Z3Functions.cellCenter` → `pointInPolygonJoin*` /
+  * through GEO (`GridColumns(kernel).cellCenter` → `pointInPolygonJoin*` /
   * `knnJoin` / `distanceJoin` on lon/lat), which is exact because the
   * joins here take raw coordinates, not foreign cell ids. Extending
   * the disk/safe-radius certificates to the other kernels requires a
@@ -47,7 +47,7 @@ object SpatialOps {
                  lat0: Double = Grids.DefaultLat, lon0: Double = Grids.DefaultLon,
                  az: Double = Grids.DefaultAz): Seq[Long] = {
     import scala.collection.parallel.CollectionConverters._
-    val grid = Grids.get(lat0, lon0, az)
+    val grid = GridKernel.igeo7(lat0, lon0, az)
     val gf = new GeometryFactory()
     val poly = new WKTReader(gf).read(wkt)
     val prep = org.locationtech.jts.geom.prep.PreparedGeometryFactory.prepare(poly)
@@ -102,6 +102,7 @@ object SpatialOps {
   def coverCellsDf(polygons: DataFrame, res: Int,
                    lat0: Double = Grids.DefaultLat, lon0: Double = Grids.DefaultLon,
                    az: Double = Grids.DefaultAz): DataFrame = {
+    val g = GridColumns(GridKernel.igeo7(lat0, lon0, az))
     val envUdf = udf { (wkt: String) => JtsCache.envelope(wkt) }
     val seed = polygons
       .withColumn("__env", envUdf(col("wkt"))
@@ -110,11 +111,11 @@ object SpatialOps {
     var df = seed
     for (k <- 1 to res) {
       val margin = math.toDegrees(0.6954709 / math.pow(7.0, k / 2.0)) * 2.0
-      val c = F.cellCenter(col("cell_id"), lat0, lon0, az)
+      val c = g.cellCenter(col("cell_id"))
       val lonMargin = lit(margin) /
         cos(radians(least(lit(85.0), abs(c.getField("lat")))))
       df = df.select(col("poly_id"), col("wkt"), col("__env"),
-          explode(F.z7Children(col("cell_id"))).as("cell_id"))
+          explode(g.children(col("cell_id"))).as("cell_id"))
         .where(
           GridOps.lonDistToRange(c.getField("lon"),
             col("__env.minx"), col("__env.maxx")) <= lonMargin &&
@@ -129,7 +130,7 @@ object SpatialOps {
       JtsCache.intersectsRing(wkt,
         ring.map(r => (r.getDouble(0), r.getDouble(1))))
     }
-    df.where(refine(col("wkt"), F.cellBoundary(col("cell_id"), lat0, lon0, az)))
+    df.where(refine(col("wkt"), g.cellBoundary(col("cell_id"))))
       .select("poly_id", "wkt", "cell_id")
   }
 
@@ -228,7 +229,8 @@ object SpatialOps {
                               az: Double = Grids.DefaultAz): DataFrame = {
     val hinted = hintCovers(
       covers.withColumnRenamed("wkt", "poly_wkt"), broadcastCovers)
-    val pts = GridOps.cellsForGeoPoints(points, lonCol, latCol, res, lat0, lon0, az)
+    val pts = GridOps.cellsForGeoPoints(points, lonCol, latCol, res,
+      GridKernel.igeo7(lat0, lon0, az))
     pts.join(hinted, Seq("cell_id"))
       .where(pipRefine(col("poly_wkt"), col(lonCol), col(latCol)))
       .drop("poly_wkt")
@@ -272,7 +274,8 @@ object SpatialOps {
                                 lat0: Double = Grids.DefaultLat,
                                 lon0: Double = Grids.DefaultLon,
                                 az: Double = Grids.DefaultAz): DataFrame = {
-    val resList = covers.select(F.z7Resolution(col("cell_id")).as("r"))
+    val z7 = GridColumns(GridKernel.igeo7())
+    val resList = covers.select(z7.resolution(col("cell_id")).as("r"))
       .distinct().collect().map(_.getInt(0)).sorted
     require(resList.nonEmpty, "empty cover relation")
     require(resList.last <= res,
@@ -280,9 +283,10 @@ object SpatialOps {
     val hinted = hintCovers(
       covers.withColumnRenamed("wkt", "poly_wkt")
         .withColumnRenamed("cell_id", "__cov"), broadcastCovers)
-    GridOps.cellsForGeoPoints(points, lonCol, latCol, res, lat0, lon0, az)
+    GridOps.cellsForGeoPoints(points, lonCol, latCol, res,
+      GridKernel.igeo7(lat0, lon0, az))
       .withColumn("__cov", explode(array(
-        resList.map(rr => F.z7AncestorAtExpr(col("cell_id"), lit(rr))).toIndexedSeq: _*)))
+        resList.map(rr => z7.ancestorAtExpr(col("cell_id"), lit(rr))).toIndexedSeq: _*)))
       .join(hinted, Seq("__cov"))
       .where(pipRefine(col("poly_wkt"), col(lonCol), col(latCol)))
       .drop("poly_wkt", "__cov")

@@ -3,7 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.spark.{DggsFunctions => F}
+import graft.dggs.GridKernel
+import graft.spark.GridColumns
 
 /** Structured Streaming surface: the cell math is a narrow stateless
   * map, so every batch operator lifts to streams unchanged; stateful
@@ -15,7 +16,8 @@ object StreamingOps {
 
   /** assign cells on a stream (works identically on readStream frames) */
   def assignCells(stream: DataFrame, lonCol: String, latCol: String, res: Int): DataFrame =
-    stream.withColumn("cell_id", F.cellForPoint(col(lonCol), col(latCol), lit(res)))
+    stream.withColumn("cell_id",
+      GridColumns(GridKernel.igeo7()).cellForPoint(col(lonCol), col(latCol), lit(res)))
 
   /** per-cell, per-time-window counts with a watermark: the streaming
     * form of BIN_POINT_VALS/occupancy (append-mode compatible).
@@ -36,7 +38,7 @@ object StreamingOps {
     assigned
       .withWatermark(tsCol, watermarkDur)
       .groupBy(window(col(tsCol), windowDur),
-        F.z7AncestorAt(col("cell_id"), lit(toRes)).as("cell_coarse"))
+        GridColumns(GridKernel.igeo7()).ancestorAt(col("cell_id"), lit(toRes)).as("cell_coarse"))
       .agg(count(lit(1)).as("n"))
 
   /** streaming ZONAL counts: a STATIC polygon-cover relation

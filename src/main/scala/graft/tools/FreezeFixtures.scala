@@ -3,7 +3,8 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.{CorpusOps, DatelineOps, GridOps, RasterOps, Tables}
-import graft.spark.{DggsFunctions => F, Grids, Seqnum}
+import graft.dggs.GridKernel
+import graft.spark.{GridColumns, Seqnum}
 import graft.dggs.{Sphere, Z7}
 import Sphere.GeoRad
 
@@ -40,12 +41,12 @@ object FreezeFixtures {
       .select("lon_mdeg", "lat_mdeg", "lon", "lat").distinct()
       .as[(Long, Long, Double, Double)].collect()
       .sortBy(t => (t._1, t._2))
-    val g = Grids.default
-    val t4g = graft.dggs.Isea4TGrids.default
-    val d4g = graft.dggs.Isea4DGrids.default
-    val h3g = graft.dggs.Isea3HGrids.default
-    val h4g = graft.dggs.Isea4HGrids.default
-    val h43g = graft.dggs.Isea43HGrids.default(3)
+    val g = GridKernel.igeo7()
+    val t4g = GridKernel.isea4t()
+    val d4g = GridKernel.isea4d()
+    val h3g = GridKernel.isea3h()
+    val h4g = GridKernel.isea4h()
+    val h43g = GridKernel.isea43h(3)
     val mapRows = geo.map { case (lonM, latM, lon, lat) =>
       val p = GeoRad.fromDeg(lat, lon)
       val cs = (3 to 6).map(r => Z7.toZ7String(g.cellForPoint(p, r)))
@@ -70,7 +71,7 @@ object FreezeFixtures {
     }
 
     val extent = GridOps.gridCellIdsForExtent(spark, 4, Some((20.2, 57.0, 28.4, 60.0)))
-      .select(F.z7String(col("cell_id"))).as[String].collect().sorted
+      .select(GridColumns(g).string(col("cell_id"))).as[String].collect().sorted
     val extentRows = extent.map(n => s"  ('$n')")
 
     // hex-kernel extents over the same box (regression pins: the
@@ -79,15 +80,12 @@ object FreezeFixtures {
     // exact against full driver-side enumeration for mid-lat and
     // antimeridian boxes on all three kernels)
     val hexBox = Some((20.2, 57.0, 28.4, 60.0))
-    val extent3hNames = GridOps.gridCellIdsForExtent3H(spark, 8, hexBox)
-      .select(graft.spark.Z3Functions.z3String(col("cell_id")))
-      .as[String].collect().sorted
-    val extent4hNames = GridOps.gridCellIdsForExtent4H(spark, 6, hexBox)
-      .select(graft.spark.Z4Functions.z4String(col("cell_id")))
-      .as[String].collect().sorted
-    val extent43hNames = GridOps.gridCellIdsForExtent43H(spark, 6, 3, hexBox)
-      .select(graft.spark.Z43Functions.z43String(col("cell_id")))
-      .as[String].collect().sorted
+    def extentNames(k: GridKernel, res: Int): Array[String] =
+      GridOps.gridCellIdsForExtent(spark, res, hexBox, k)
+        .select(GridColumns(k).string(col("cell_id"))).as[String].collect().sorted
+    val extent3hNames = extentNames(h3g, 8)
+    val extent4hNames = extentNames(h4g, 6)
+    val extent43hNames = extentNames(h43g, 6)
     val extent3hRows = extent3hNames.map(n => s"  ('$n')")
     val extent4hRows = extent4hNames.map(n => s"  ('$n')")
     val extent43hRows = extent43hNames.map(n => s"  ('$n')")
@@ -95,20 +93,16 @@ object FreezeFixtures {
     // hex cell geometry (centroid µdeg floor + vertex count), computed
     // DRIVER-SIDE through the pure kernels — the driver queries run the
     // Spark column path over the same ids, so the two paths cross-check
-    def geomRows(names: Array[String], fromName: String => Long,
-                 center: Long => GeoRad, boundary: Long => Array[GeoRad]): Array[String] =
+    def geomRows(names: Array[String], k: GridKernel): Array[String] =
       names.map { n =>
-        val z = fromName(n)
-        val c = center(z)
+        val z = k.cellFromString(n)
+        val c = k.cellCenter(z)
         s"  ('$n', ${math.floor(c.lonDeg * 1e6).toLong}, " +
-          s"${math.floor(c.latDeg * 1e6).toLong}, ${boundary(z).length})"
+          s"${math.floor(c.latDeg * 1e6).toLong}, ${k.cellBoundary(z).length})"
       }
-    val geom3hRows = geomRows(extent3hNames, graft.dggs.Z3.fromZ3String,
-      h3g.cellCenter, h3g.cellBoundary)
-    val geom4hRows = geomRows(extent4hNames, graft.dggs.Z4.fromZ4String,
-      h4g.cellCenter, h4g.cellBoundary)
-    val geom43hRows = geomRows(extent43hNames, graft.dggs.Z4.fromZ4String,
-      h43g.cellCenter, h43g.cellBoundary)
+    val geom3hRows = geomRows(extent3hNames, h3g)
+    val geom4hRows = geomRows(extent4hNames, h4g)
+    val geom43hRows = geomRows(extent43hNames, h43g)
 
     // antimeridian-crossing box (Fiji-ish): frozen as the UNION of its
     // two split halves, each computed by the ordinary NON-wrapped path —
@@ -117,7 +111,7 @@ object FreezeFixtures {
     val wrapHalves = Seq((175.0, -20.0, 180.0, -10.0), (-180.0, -20.0, -175.0, -10.0))
     val wrapIds = wrapHalves.flatMap { h =>
       GridOps.gridCellIdsForExtent(spark, 4, Some(h))
-        .select(F.z7String(col("cell_id"))).as[String].collect()
+        .select(GridColumns(g).string(col("cell_id"))).as[String].collect()
     }.distinct.sorted
     val wrapRows = wrapIds.map(n => s"  ('$n')")
 
@@ -133,7 +127,7 @@ object FreezeFixtures {
     val wktClip =
       "POLYGON ((21.0 57.3, 28.0 57.8, 27.5 59.7, 24.0 60.4, 21.5 59.5, 21.0 57.3))"
     val wktIds = graft.ops.SpatialOps.gridCellIdsForWkt(spark, wktClip, 5)
-      .select(F.z7String(col("cell_id"))).as[String].collect().sorted
+      .select(GridColumns(g).string(col("cell_id"))).as[String].collect().sorted
     val wktRows = wktIds.map(n => s"  ('$n')")
 
     // raster sample: the 32×32 pixel corner of the synthetic 256×256

@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.dggs.{Sphere, Z7}
-import graft.spark.Grids
+import graft.dggs.{GridKernel, Sphere, Z7}
 import Sphere.GeoRad
 
 /** The SINGLE implementation of the kNN disk-coverage measurement: the
@@ -26,7 +25,7 @@ object KnnProbe {
     * `res`, measured over the distortion-worst sample cells.
     */
   def measureExteriorBound(res: Int, k: Int): Double = {
-    val g = Grids.default
+    val g = GridKernel.igeo7()
     val R = Sphere.EarthRadiusKm
     val pentas = (0 to 11).map(b => Z7.pack(b, Seq.fill(res)(0)))
     val pentaNbrs = pentas.flatMap(g.ring1)

@@ -73,7 +73,9 @@ class AddrSpec extends AnyFunSuite {
     val spark = org.apache.spark.sql.SparkSession.builder()
       .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
     import spark.implicits._
-    import graft.ops.GridOps.addressTransform3H
+    def addressTransform3H(df: org.apache.spark.sql.DataFrame, c: String, from: String,
+                           to: String, res: Int) =
+      graft.ops.GridOps.addressTransform(df, c, from, to, res, GridKernel.isea3h())
     val g = graft.dggs.Isea3HGrids.default
     val names = (for (q <- 1 to 10; d1 <- 0 to 2; d2 <- 0 to 2)
       yield f"$q%02d$d1$d2${(d1 + d2) % 3}") ++ Seq("00000", "11000")

@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
-import graft.dggs.{Sphere, Z7}
-import graft.spark.{DggsFunctions => F, Grids, Seqnum}
+import graft.dggs.{GridKernel, Sphere, Z7}
+import graft.spark.{DggsFunctions => F, GridColumns, Grids, Seqnum}
 
 /** Spark-level integration tests: corpus invariants, checkpoint
   * kill-and-resume determinism, ring topology, seqnum bijectivity,
@@ -21,6 +21,8 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     .getOrCreate()
 
   override def afterAll(): Unit = spark.stop()
+
+  private val Z7C = GridColumns(GridKernel.igeo7())
 
   def corpus(n: Int) = {
     import spark.implicits._
@@ -784,16 +786,16 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("compactCells: cascade, puncture, pentagon family-6, roundtrip") {
     import spark.implicits._
     def names(df: org.apache.spark.sql.DataFrame): Set[String] =
-      df.select(F.z7String(col("cell_id"))).as[String].collect().toSet
+      df.select(Z7C.string(col("cell_id"))).as[String].collect().toSet
     def fromNames(s: Seq[String]) =
-      s.toDF("name").select(F.z7FromString(col("name")).as("cell_id"))
+      s.toDF("name").select(Z7C.fromString(col("name")).as("cell_id"))
     // full two-level cover cascades to the single parent
     val full = GridOps.gridCellsFromCoarseCells(
       Seq("023").toDF("p"), "p", 3).select("cell_id")
     assert(names(GridOps.compactCells(full)) == Set("023"))
     // puncture one leaf: its family survives at res 3, the other six
     // families compact to res 2, nothing reaches res 1
-    val punctured = full.where(F.z7String(col("cell_id")) =!= "02340")
+    val punctured = full.where(Z7C.string(col("cell_id")) =!= "02340")
     assert(names(GridOps.compactCells(punctured)) ==
       Set("0230", "0231", "0232", "0233", "0235", "0236",
         "02341", "02342", "02343", "02344", "02345", "02346"))
@@ -818,22 +820,22 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // 4T variant: family size 4 (no pentagon case), same loop — a full
     // two-level triangle cover cascades to its base cell and a 3-of-4
     // family does NOT compact
-    import graft.spark.{T4Functions => T}
+    val T = GridColumns(GridKernel.isea4t())
     val t4full = Seq("05").toDF("p")
-      .select(explode(T.t4DescendantsAt(T.t4FromString(col("p")), lit(2)))
+      .select(explode(T.descendantsAt(T.fromString(col("p")), lit(2)))
         .as("cell_id"))
-    assert(GridOps.compactCells4T(t4full)
-      .select(T.t4String(col("cell_id"))).as[String].collect().toSet
+    assert(GridOps.compactCells(t4full, kernel = T.kernel)
+      .select(T.string(col("cell_id"))).as[String].collect().toSet
       == Set("05"))
-    val t4punct = t4full.where(T.t4String(col("cell_id")) =!= "0500")
-    assert(GridOps.compactCells4T(t4punct)
-      .select(T.t4String(col("cell_id"))).as[String].collect().toSet
+    val t4punct = t4full.where(T.string(col("cell_id")) =!= "0500")
+    assert(GridOps.compactCells(t4punct, kernel = T.kernel)
+      .select(T.string(col("cell_id"))).as[String].collect().toSet
       == Set("051", "052", "053", "0501", "0502", "0503"))
     // keyed compaction: identical cell sets under two keys compact
     // independently (no cross-key family completion)
     val twoKeys = Seq("a", "b").toDF("k").crossJoin(full)
     val ck = GridOps.compactCells(twoKeys, keyCols = Seq("k"))
-    assert(ck.select(F.z7String(col("cell_id")), col("k"))
+    assert(ck.select(Z7C.string(col("cell_id")), col("k"))
       .as[(String, String)].collect().toSet == Set("023" -> "a", "023" -> "b"))
     // a family split across keys must NOT compact
     val split7 = GridOps.gridCellsFromCoarseCells(Seq("023").toDF("p"), "p", 2)
@@ -845,56 +847,59 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("compactCells3H/4H: cascade, cap family-1 chain, puncture, roundtrip") {
     import spark.implicits._
-    import graft.spark.{Z3Functions => H3, Z4Functions => H4}
+    val H3 = GridColumns(GridKernel.isea3h())
+    val H4 = GridColumns(GridKernel.isea4h())
     def n3(df: org.apache.spark.sql.DataFrame): Set[String] =
-      df.select(H3.z3String(col("cell_id"))).as[String].collect().toSet
+      df.select(H3.string(col("cell_id"))).as[String].collect().toSet
     def n4h(df: org.apache.spark.sql.DataFrame): Set[String] =
-      df.select(H4.z4String(col("cell_id"))).as[String].collect().toSet
+      df.select(H4.string(col("cell_id"))).as[String].collect().toSet
     // aperture-3: full two-level quad cover cascades; 2-of-3 family stays
     val full3 = Seq("05").toDF("p")
-      .select(explode(H3.z3DescendantsAt(H3.z3FromString(col("p")), lit(2)))
+      .select(explode(H3.descendantsAt(H3.fromString(col("p")), lit(2)))
         .as("cell_id"))
-    assert(n3(GridOps.compactCells3H(full3)) == Set("05"))
-    val punct3 = full3.where(H3.z3String(col("cell_id")) =!= "0500")
-    assert(n3(GridOps.compactCells3H(punct3)) ==
+    assert(n3(GridOps.compactCells(full3, kernel = H3.kernel)) == Set("05"))
+    val punct3 = full3.where(H3.string(col("cell_id")) =!= "0500")
+    assert(n3(GridOps.compactCells(punct3, kernel = H3.kernel)) ==
       Set("051", "052", "0501", "0502"))
     // cap rule: the lone descendant chain compacts to the base (family 1)
     val cap3 = Seq("000000").toDF("n")
-      .select(H3.z3FromString(col("n")).as("cell_id"))
-    assert(n3(GridOps.compactCells3H(cap3)) == Set("00"))
+      .select(H3.fromString(col("n")).as("cell_id"))
+    assert(n3(GridOps.compactCells(cap3, kernel = H3.kernel)) == Set("00"))
     // but a QUAD cell with a single child does NOT compact
     val lone3 = Seq("0500").toDF("n")
-      .select(H3.z3FromString(col("n")).as("cell_id"))
-    assert(n3(GridOps.compactCells3H(lone3)) == Set("0500"))
+      .select(H3.fromString(col("n")).as("cell_id"))
+    assert(n3(GridOps.compactCells(lone3, kernel = H3.kernel)) == Set("0500"))
     // roundtrip on the uniform-res punctured set
-    assert(n3(GridOps.uncompactCells3H(GridOps.compactCells3H(punct3), 2)) ==
+    assert(n3(GridOps.uncompactCells(
+      GridOps.compactCells(punct3, kernel = H3.kernel), 2, kernel = H3.kernel)) ==
       n3(punct3))
     // aperture-4: family 4 on quads, cap 11 chain, 3-of-4 stays
     val full4 = Seq("05").toDF("p")
-      .select(explode(H4.z4DescendantsAt(H4.z4FromString(col("p")), lit(2)))
+      .select(explode(H4.descendantsAt(H4.fromString(col("p")), lit(2)))
         .as("cell_id"))
-    assert(n4h(GridOps.compactCells4H(full4)) == Set("05"))
-    val punct4 = full4.where(H4.z4String(col("cell_id")) =!= "0500")
-    assert(n4h(GridOps.compactCells4H(punct4)) ==
+    assert(n4h(GridOps.compactCells(full4, kernel = H4.kernel)) == Set("05"))
+    val punct4 = full4.where(H4.string(col("cell_id")) =!= "0500")
+    assert(n4h(GridOps.compactCells(punct4, kernel = H4.kernel)) ==
       Set("051", "052", "053", "0501", "0502", "0503"))
     val cap4 = Seq("11000").toDF("n")
-      .select(H4.z4FromString(col("n")).as("cell_id"))
-    assert(n4h(GridOps.compactCells4H(cap4)) == Set("11"))
-    assert(n4h(GridOps.uncompactCells4H(GridOps.compactCells4H(punct4), 2)) ==
+      .select(H4.fromString(col("n")).as("cell_id"))
+    assert(n4h(GridOps.compactCells(cap4, kernel = H4.kernel)) == Set("11"))
+    assert(n4h(GridOps.uncompactCells(
+      GridOps.compactCells(punct4, kernel = H4.kernel), 2, kernel = H4.kernel)) ==
       n4h(punct4))
     // mixed aperture (n4=3): a full res-4 cover under a res-3 parent
     // needs only 3 children per family at level 4 (aperture 3) but 4 at
     // level 3 (aperture 4) — compaction crosses the boundary exactly
-    import graft.spark.{Z43Functions => H43}
+    val H43 = GridColumns(GridKernel.isea43h(3))
     def n43(df: org.apache.spark.sql.DataFrame): Set[String] =
-      df.select(H43.z43String(col("cell_id"))).as[String].collect().toSet
+      df.select(H43.string(col("cell_id"))).as[String].collect().toSet
     val full43 = Seq("0520").toDF("p")
-      .select(explode(H43.z43DescendantsAt(H43.z43FromString(col("p")), lit(4), 3))
+      .select(explode(H43.descendantsAt(H43.fromString(col("p")), lit(4)))
         .as("cell_id"))
     assert(full43.count() == 12L) // 4 level-3 children x 3 level-4 children
-    assert(n43(GridOps.compactCells43H(full43, 3)) == Set("0520"))
-    val punct43 = full43.where(H43.z43String(col("cell_id")) =!= "052000")
-    assert(n43(GridOps.compactCells43H(punct43, 3)) ==
+    assert(n43(GridOps.compactCells(full43, kernel = H43.kernel)) == Set("0520"))
+    val punct43 = full43.where(H43.string(col("cell_id")) =!= "052000")
+    assert(n43(GridOps.compactCells(punct43, kernel = H43.kernel)) ==
       Set("05201", "05202", "05203", "052001", "052002"))
     spark.catalog.clearCache()
   }
@@ -1006,7 +1011,7 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(sums.values.forall(_ == total), sums)
     // level-from-level equals direct aggregation at an interior level
     val direct = cells
-      .groupBy(F.z7String(F.z7AncestorAt(col("cell_id"), lit(2))).as("name"))
+      .groupBy(Z7C.string(F.z7AncestorAt(col("cell_id"), lit(2))).as("name"))
       .agg(count(lit(1)).as("n")).as[(String, Long)].collect().toMap
     val lvl2 = pyr.where(col("res") === 2).select("name", "n")
       .as[(String, Long)].collect().toMap
@@ -1073,7 +1078,7 @@ class SparkOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val nComp = compacted.count()
     assert(nComp < nFull, s"compaction must shrink the cover: $nComp >= $nFull")
     // the tropics interior is deep homogeneous — multiple levels merge
-    assert(compacted.select(F.z7Resolution(col("cell_id"))).distinct().count() > 1)
+    assert(compacted.select(Z7C.resolution(col("cell_id"))).distinct().count() > 1)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("doc_id", "offset", "poly_id")
         .as[(String, Int, String)].collect().toSet
@@ -1863,7 +1868,7 @@ class CorpusStoreSpec extends org.scalatest.funsuite.AnyFunSuite {
     val pruned = CorpusStore.readD4Range(spark, dir, "cell_id", parent, 6)
     val full = spark.read.parquet(dir)
     val expected = full.where(
-      graft.spark.D4Functions.d4AncestorAt(col("cell_id"), lit(2)) === parent)
+      GridColumns(GridKernel.isea4d()).ancestorAt(col("cell_id"), lit(2)) === parent)
     assert(pruned.count() == expected.count() && pruned.count() > 0)
     assert(pruned.except(expected).count() == 0)
     val touched = pruned.select(input_file_name()).distinct().count()
