@@ -44,6 +44,15 @@ trait CellCodec {
   * Input contract, enforced here once for every kernel: a point must be
   * finite with |lat| ≤ 90°, a resolution must lie in [0, maxRes];
   * anything else is an `IllegalArgumentException` naming the kernel.
+  *
+  * Geometry memo: `cellCenter` / `cellBoundary` remember the result for
+  * every cell at a resolution ≤ [[memoRes]], the levels whose cumulative
+  * cell count fits the fixed budget [[GridKernel.GeometryMemoCells]]
+  * (32 768 cells, a few MB). Covers, extents and coarse rollups ask for
+  * the same few hundred coarse cells millions of times; each answer is
+  * an inverse projection (IGEO7 res 9: ~9 µs center, ~50 µs boundary).
+  * The memo fills on first use; reads are a lock-free
+  * `ConcurrentHashMap.get`. Finer cells are computed on every call.
   */
 trait GridKernel extends Serializable {
   def key: GridKernel.Key
@@ -68,8 +77,65 @@ trait GridKernel extends Serializable {
   }
   /** cellForPoint on validated input */
   protected def locate(p: GeoRad, res: Int): Long
-  def cellCenter(cell: Long): GeoRad
-  def cellBoundary(cell: Long): Array[GeoRad]
+
+  /** cell center on the sphere ([[center]], memoized at res ≤ [[memoRes]]) */
+  final def cellCenter(cell: Long): GeoRad =
+    if (!memoized(cell)) center(cell)
+    else {
+      val key = java.lang.Long.valueOf(cell)
+      val hit = centerMemo.get(key)
+      if (hit != null) hit else remember(centerMemo, key, center(cell))
+    }
+  /** cell boundary vertices ([[boundary]], memoized at res ≤ [[memoRes]]);
+    * a memoized boundary is returned as a fresh copy, so callers may
+    * mutate the array
+    */
+  final def cellBoundary(cell: Long): Array[GeoRad] =
+    if (!memoized(cell)) boundary(cell)
+    else {
+      val key = java.lang.Long.valueOf(cell)
+      val hit = boundaryMemo.get(key)
+      (if (hit != null) hit else remember(boundaryMemo, key, boundary(cell))).clone()
+    }
+  /** cell center, computed */
+  protected[dggs] def center(cell: Long): GeoRad
+  /** cell boundary, computed */
+  protected[dggs] def boundary(cell: Long): Array[GeoRad]
+
+  /** finest resolution whose cell geometry is memoized: the deepest level
+    * at which the whole tree from the base cells down holds at most
+    * [[GridKernel.GeometryMemoCells]] cells (IGEO7 3, ISEA3H 6, ISEA4H 5,
+    * ISEA43H(3) 6, ISEA4T 5, ISEA4D 5)
+    */
+  @transient final lazy val memoRes: Int = {
+    var r = 0
+    var level = baseCells.size.toLong
+    var total = level
+    while (r < maxRes && total + level * apertureAt(r + 1) <= GridKernel.GeometryMemoCells) {
+      level *= apertureAt(r + 1)
+      total += level
+      r += 1
+    }
+    r
+  }
+  @transient private lazy val centerMemo =
+    new java.util.concurrent.ConcurrentHashMap[java.lang.Long, GeoRad]()
+  @transient private lazy val boundaryMemo =
+    new java.util.concurrent.ConcurrentHashMap[java.lang.Long, Array[GeoRad]]()
+  private def memoized(cell: Long): Boolean = resolution(cell) <= memoRes
+  /** stores `v` unless the memo is full (a malformed id can decode to a
+    * coarse resolution, so the budget is also a hard cap) and returns the
+    * value that won the race
+    */
+  private def remember[V](memo: java.util.concurrent.ConcurrentHashMap[java.lang.Long, V],
+                          key: java.lang.Long, v: V): V =
+    if (memo.size() >= GridKernel.GeometryMemoCells) v
+    else {
+      val prev = memo.putIfAbsent(key, v)
+      if (prev == null) v else prev
+    }
+  /** memoized centers and boundaries (for tests) */
+  private[dggs] def memoSizes: (Int, Int) = (centerMemo.size(), boundaryMemo.size())
 
   def cellToString(cell: Long): String = codec.toCellString(cell)
   def cellFromString(s: String): Long = codec.fromCellString(s)
@@ -126,6 +192,9 @@ object GridKernel {
   val DefaultLat = 58.28252559
   val DefaultLon = 11.25
   val DefaultAz = 0.0
+
+  /** cell budget of each kernel's geometry memo (see [[GridKernel.memoRes]]) */
+  val GeometryMemoCells = 32768
 
   /** `n4` is ISEA43H's mixed_aperture_level (0 for the other families) */
   final case class Key(family: String, n4: Int, lat0: Double, lon0: Double, az: Double)

@@ -393,7 +393,7 @@ final class IGeo7(vert0LatDeg: Double = 58.28252559,
 
   // chartToSphere: provided by HexWalkerCore
 
-  def cellCenter(z: Long): GeoRad = {
+  protected[dggs] def center(z: Long): GeoRad = {
     val (q, x, y) = centerChart(z)
     chartToSphere(q, x, y)
   }
@@ -401,7 +401,7 @@ final class IGeo7(vert0LatDeg: Double = 58.28252559,
   /** cell boundary: 6 vertices for hexagons (each the barycenter of the
     * cell and two adjacent cells), 5 for base pentagons.
     */
-  def cellBoundary(z: Long): Array[GeoRad] = {
+  protected[dggs] def boundary(z: Long): Array[GeoRad] = {
     val r = Z7.resolution(z)
     if (Z7.isPentagon(z)) return pentagonBoundary(z)
     val fix = decode(z)

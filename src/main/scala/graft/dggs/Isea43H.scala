@@ -307,7 +307,7 @@ final class Isea43H(val n4: Int,
   }
 
   /** cell center on the sphere */
-  def cellCenter(z: Long): GeoRad = {
+  protected[dggs] def center(z: Long): GeoRad = {
     val base = Z4.baseCell(z)
     if (base == 0) ico.vertices(capVerts._1)
     else if (base == 11) ico.vertices(capVerts._2)
@@ -329,7 +329,7 @@ final class Isea43H(val n4: Int,
   /** cell boundary: 6 hexagon corners (hex Voronoi vertices), 5 for the
     * vertex pentagons.
     */
-  def cellBoundary(z: Long): Array[GeoRad] = {
+  protected[dggs] def boundary(z: Long): Array[GeoRad] = {
     val base = Z4.baseCell(z)
     val r = Z4.resolution(z)
     if (Z4.isPentagon(z)) {

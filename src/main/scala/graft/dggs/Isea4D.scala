@@ -77,7 +77,7 @@ final class Isea4D(vert0LatDeg: Double = 58.28252559,
     D4.fromIj(q, clampIdx(u), clampIdx(v), res)
   }
 
-  def cellCenter(id: Long): GeoRad = {
+  protected[dggs] def center(id: Long): GeoRad = {
     val (i, j) = D4.toIj(id)
     val n = (1L << D4.resolution(id)).toDouble
     val (x, y) = uvToChart((i + 0.5) / n, (j + 0.5) / n)
@@ -85,7 +85,7 @@ final class Isea4D(vert0LatDeg: Double = 58.28252559,
   }
 
   /** the 4 rhombus corners on the sphere (u-then-v winding) */
-  def cellBoundary(id: Long): Array[GeoRad] = {
+  protected[dggs] def boundary(id: Long): Array[GeoRad] = {
     val (i, j) = D4.toIj(id)
     val n = (1L << D4.resolution(id)).toDouble
     val q = D4.quad(id)

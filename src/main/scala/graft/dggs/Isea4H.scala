@@ -236,7 +236,7 @@ final class Isea4H(vert0LatDeg: Double = 58.28252559,
   }
 
   /** cell center on the sphere */
-  def cellCenter(z: Long): GeoRad = {
+  protected[dggs] def center(z: Long): GeoRad = {
     val base = Z4.baseCell(z)
     if (base == 0) ico.vertices(capVerts._1)
     else if (base == 11) ico.vertices(capVerts._2)
@@ -262,7 +262,7 @@ final class Isea4H(vert0LatDeg: Double = 58.28252559,
   /** cell boundary: 6 hexagon corners (each ⅓ of the two adjacent unit
     * sums, the hex Voronoi vertices), 5 for the vertex pentagons.
     */
-  def cellBoundary(z: Long): Array[GeoRad] = {
+  protected[dggs] def boundary(z: Long): Array[GeoRad] = {
     val base = Z4.baseCell(z)
     val r = Z4.resolution(z)
     if (Z4.isPentagon(z)) {

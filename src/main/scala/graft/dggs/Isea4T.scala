@@ -102,7 +102,7 @@ final class Isea4T(vert0LatDeg: Double = 58.28252559,
     Array(p0, p1, p2)
   }
 
-  def cellCenter(id: Long): GeoRad = {
+  protected[dggs] def center(id: Long): GeoRad = {
     val cs = planeCorners(id)
     val cx = (cs(0)._1 + cs(1)._1 + cs(2)._1) / 3.0
     val cy = (cs(0)._2 + cs(1)._2 + cs(2)._2) / 3.0
@@ -110,7 +110,7 @@ final class Isea4T(vert0LatDeg: Double = 58.28252559,
   }
 
   /** cell boundary: the 3 triangle corners on the sphere */
-  def cellBoundary(id: Long): Array[GeoRad] = {
+  protected[dggs] def boundary(id: Long): Array[GeoRad] = {
     val f = T4.face(id)
     planeCorners(id).map { case (x, y) =>
       snyder.inverse(snyder.FacePoint(f, x, y))

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 import org.locationtech.jts.geom.{Coordinate, GeometryFactory}
 import org.locationtech.jts.io.WKTReader
 import graft.dggs.{GridKernel, Sphere, Z7}
@@ -54,10 +55,12 @@ object SpatialOps {
     val env = poly.getEnvelopeInternal
     var cells: Seq[Long] = (0 to 11).map(b => Z7.pack(b, Seq.empty))
     // per-level pruning and the final ring refine run PARALLEL on the
-    // driver (round 9): cellCenter/cellBoundary run the ~100 µs
-    // iterative inverse projection, and a world-spanning polygon keeps
-    // tens of thousands of candidates live per level — measured ~3 s
-    // single-threaded for the 5 zonal world bands at res 4. The kernel
+    // driver (round 9): below the kernel's geometry memo depth
+    // (GridKernel.memoRes, res 3 for IGEO7) cellCenter/cellBoundary run
+    // the inverse projection (~9 µs center, ~50 µs boundary at res 9),
+    // and a world-spanning polygon keeps tens of thousands of candidates
+    // live per level — measured ~3 s single-threaded for the 5 zonal
+    // world bands at res 4 before the memo. The kernel
     // is immutable/thread-safe (Grids scaladoc) and JTS prepared
     // geometry is already shared across executor task threads by the
     // refine UDFs. `.seq` restores deterministic output order.
@@ -103,24 +106,34 @@ object SpatialOps {
                    lat0: Double = Grids.DefaultLat, lon0: Double = Grids.DefaultLon,
                    az: Double = Grids.DefaultAz): DataFrame = {
     val g = GridColumns(GridKernel.igeo7(lat0, lon0, az))
-    val envUdf = udf { (wkt: String) => JtsCache.envelope(wkt) }
+    // non-nullable, so the optimizer infers no isnotnull(__env.*) filter
+    // that would re-parse every polygon twice more below the projection
+    val envUdf = udf { (wkt: String) => JtsCache.envelope(wkt) }.asNonNullable()
+    val envType = StructType(Seq("minx", "miny", "maxx", "maxy")
+      .map(StructField(_, DoubleType, nullable = false)))
     val seed = polygons
-      .withColumn("__env", envUdf(col("wkt"))
-        .cast("struct<minx:double,miny:double,maxx:double,maxy:double>"))
+      .withColumn("__env", envUdf(col("wkt")).cast(envType))
       .withColumn("cell_id", explode(lit((0 to 11).map(b => Z7.pack(b, Seq.empty)).toArray)))
     var df = seed
     for (k <- 1 to res) {
       val margin = math.toDegrees(0.6954709 / math.pow(7.0, k / 2.0)) * 2.0
-      val c = g.cellCenter(col("cell_id"))
+      val c = col("__c")
       val lonMargin = lit(margin) /
         cos(radians(least(lit(85.0), abs(c.getField("lat")))))
+      // each child's center is computed once, inside the generator: a
+      // center column projected after the explode would be inlined back
+      // into every reference of the filter below (7 per level)
       df = df.select(col("poly_id"), col("wkt"), col("__env"),
-          explode(g.children(col("cell_id"))).as("cell_id"))
+          explode(transform(g.children(col("cell_id")),
+            z => struct(z.as("cell_id"), g.cellCenter(z).as("c")))).as("__k"))
+        .select(col("poly_id"), col("wkt"), col("__env"),
+          col("__k.cell_id").as("cell_id"), col("__k.c").as("__c"))
         .where(
           GridOps.lonDistToRange(c.getField("lon"),
             col("__env.minx"), col("__env.maxx")) <= lonMargin &&
             c.getField("lat") >= col("__env.miny") - lit(margin) &&
             c.getField("lat") <= col("__env.maxy") + lit(margin))
+        .drop("__c")
       // a FEW-polygon input (often 1 clip geometry) would otherwise pin
       // the whole deep cover fan-out to as many tasks as input rows —
       // see GridOps.lineageStop for the full rationale
@@ -662,12 +675,16 @@ object SpatialOps {
 }
 
 /** executor-side cache of prepared polygons for the refine UDF.
-  * Size-bounded LRU (access order): coverCellsDf is pitched at thousands
-  * of distinct polygons per job, and an unbounded WKT-keyed map would
-  * keep every polygon ever seen resident for the executor JVM lifetime.
+  * Size-bounded, at most [[MaxEntries]] polygons (plus one per thread
+  * missing at the same moment): coverCellsDf is pitched at thousands of
+  * distinct polygons per job, and an unbounded WKT-keyed map would keep
+  * every polygon ever seen resident for the executor JVM lifetime. Reads
+  * are a lock-free `get`; a miss on a full cache evicts one arbitrary
+  * entry, so a task cycling over more polygons than the bound keeps most
+  * of them cached instead of re-preparing all of them.
   */
 object JtsCache {
-  private val MaxEntries = 4096
+  private[ops] val MaxEntries = 4096
   @transient private lazy val cache =
     new java.util.concurrent.ConcurrentHashMap[String,
       org.locationtech.jts.geom.prep.PreparedGeometry]()
@@ -679,16 +696,23 @@ object JtsCache {
     ThreadLocal.withInitial[WKTReader](() => new WKTReader(gf))
 
   private def prepared(wkt: String) = {
-    // bound the cache: reads must stay lock-free (this is called per ROW
-    // in the refine UDFs), so the eviction policy is the cheapest safe
-    // one — drop everything when full and let the working set rebuild.
-    // A job touching >4096 distinct polygons in one task thrashes, but
-    // that is strictly better than the previous unbounded growth.
-    if (cache.size() > MaxEntries) cache.clear()
-    cache.computeIfAbsent(wkt, w =>
-      org.locationtech.jts.geom.prep.PreparedGeometryFactory.prepare(
-        reader.get().read(w)))
+    // called per ROW in the refine UDFs: a hit is one lock-free get. A
+    // miss on a full cache evicts the first key the iterator yields
+    // (the lowest occupied hash bin), so the keys that churn are the
+    // few that hash there and the rest of the working set stays put
+    val hit = cache.get(wkt)
+    if (hit != null) hit
+    else {
+      val it = cache.keySet().iterator()
+      while (cache.size() >= MaxEntries && it.hasNext) { it.next(); it.remove() }
+      cache.computeIfAbsent(wkt, w =>
+        org.locationtech.jts.geom.prep.PreparedGeometryFactory.prepare(
+          reader.get().read(w)))
+    }
   }
+
+  /** prepared polygons held (for tests) */
+  private[ops] def size: Int = cache.size()
 
   def contains(wkt: String, lon: Double, lat: Double): Boolean =
     prepared(wkt).contains(gf.createPoint(new Coordinate(lon, lat)))
